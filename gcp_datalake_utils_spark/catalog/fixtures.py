@@ -6,11 +6,17 @@ metadata *data*: a ``meta_tables`` and an exploded ``meta_columns``
 DataFrame, so every "loop over tables/columns" becomes a DataFrame
 transform (SURVEY.md §1.3).
 
-The same constants feed two consumers:
+The same constants render once, as a typed ``(VALUES ...) AS t(...)``
+SQL fragment (``*_values()``), and that one text feeds both engines:
 
-- ``*_df(spark)``  -> Spark DataFrames (engine input)
-- ``*_values()``   -> DuckDB ``(VALUES ...) AS t(...)`` fragments (oracle
-  input), so both engines compute over byte-identical rows by construction.
+- ``*_values()``   -> DuckDB oracle input;
+- ``*_df(spark)``  -> ``spark.sql`` over the same fragment (engine input),
+
+so both engines compute over byte-identical rows by construction. As
+SQL literals the Spark frames plan as ``LocalTableScan``: no Python
+workers start to scan them, and two separately built catalogs are
+``sameSemantics``-equal, which is what lets ``detect_all`` memoize by
+plan.
 
 Fixture contents per FIXTURES.md: (a) the real payload-table schemas with
 BigQuery type names, (b) the synthetic Data-Vault / classic-naming
@@ -26,7 +32,6 @@ ordering (FIXTURES.md §4 determinism rules).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # meta_tables: (dataset_id, table_id, table_ord, table_type, num_rows,
@@ -353,12 +358,20 @@ def _sql_lit(v) -> str:
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):
         return repr(v)
-    return "'" + str(v).replace("'", "''") + "'"
+    s = str(v)
+    # Spark reads backslash escapes in string literals ('a\nb' is a
+    # newline, '\d' is 'd'); DuckDB keeps them verbatim. A doubled quote
+    # reads the same in both.
+    if "\\" in s:
+        raise ValueError(f"fixture string {s!r} contains a backslash, "
+                         "which Spark and DuckDB read differently")
+    return "'" + s.replace("'", "''") + "'"
 
 
 def _values(rows: list[tuple], alias: str, cols: list[str],
             casts: dict[str, str] | None = None) -> str:
-    """Render rows as a DuckDB ``(VALUES ...) alias(cols)`` fragment.
+    """Render rows as a ``(VALUES ...) alias(cols)`` fragment that Spark
+    and DuckDB both read.
 
     ``casts`` maps column name -> SQL type; applied inside a wrapping
     SELECT so both engines agree on result types (e.g. DOUBLE not
@@ -420,48 +433,15 @@ def rel_cache_values(alias: str = "rel_cache") -> str:
         {"confidence": "DOUBLE", "cached_at": "TIMESTAMP"})
 
 
-_TABLES_SCHEMA = T.StructType([
-    T.StructField("dataset_id", T.StringType(), False),
-    T.StructField("table_id", T.StringType(), False),
-    T.StructField("table_ord", T.IntegerType(), False),
-    T.StructField("table_type", T.StringType(), False),
-    T.StructField("num_rows", T.LongType(), False),
-    T.StructField("num_bytes", T.LongType(), False),
-    T.StructField("labels_str", T.StringType(), False),
-])
-
-_COLUMNS_SCHEMA = T.StructType([
-    T.StructField("table_id", T.StringType(), False),
-    T.StructField("ordinal", T.IntegerType(), False),
-    T.StructField("name", T.StringType(), False),
-    T.StructField("data_type", T.StringType(), False),
-    T.StructField("mode", T.StringType(), False),
-    T.StructField("max_length", T.IntegerType(), True),
-    T.StructField("precision", T.IntegerType(), True),
-    T.StructField("scale", T.IntegerType(), True),
-])
-
-_RULES_SCHEMA = T.StructType([
-    T.StructField("source_table", T.StringType(), False),
-    T.StructField("source_column", T.StringType(), False),
-    T.StructField("target_table", T.StringType(), False),
-    T.StructField("target_column", T.StringType(), False),
-    T.StructField("relationship_type", T.StringType(), False),
-    T.StructField("confidence", T.DoubleType(), False),
-])
-
-_PATTERNS_SCHEMA = T.StructType([
-    T.StructField("pattern", T.StringType(), False),
-    T.StructField("target_suffix", T.StringType(), False),
-    T.StructField("confidence", T.DoubleType(), False),
-])
+def _frame(spark: SparkSession, values: str) -> DataFrame:
+    return spark.sql(f"SELECT * FROM {values}")
 
 
 def meta_tables_df(spark: SparkSession) -> DataFrame:
     """meta_tables with both the canonical ``labels_str`` and a native
     ``labels`` MAP<STRING,STRING> column (models.py:66)."""
     from pyspark.sql import functions as F
-    return (spark.createDataFrame(META_TABLES_EXT, _TABLES_SCHEMA)
+    return (_frame(spark, meta_tables_values())
             .withColumn(
                 "labels",
                 F.when(F.col("labels_str") == "",
@@ -470,43 +450,20 @@ def meta_tables_df(spark: SparkSession) -> DataFrame:
 
 
 def meta_columns_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(META_COLUMNS_EXT, _COLUMNS_SCHEMA)
+    return _frame(spark, meta_columns_values())
 
 
 def custom_rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CUSTOM_RULES, _RULES_SCHEMA)
+    return _frame(spark, custom_rules_values())
 
 
 def naming_patterns_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(NAMING_PATTERNS, _PATTERNS_SCHEMA)
-
-
-_STATE_SCHEMA = T.StructType([
-    T.StructField("table_id", T.StringType(), False),
-    T.StructField("checksum", T.StringType(), False),
-    T.StructField("last_processed", T.StringType(), False),
-])
+    return _frame(spark, naming_patterns_values())
 
 
 def proc_state_df(spark: SparkSession) -> DataFrame:
-    from pyspark.sql import functions as F
-    return (spark.createDataFrame(PROC_STATE, _STATE_SCHEMA)
-            .withColumn("last_processed", F.to_timestamp("last_processed")))
-
-
-_CACHE_SCHEMA = T.StructType([
-    T.StructField("pair_key", T.StringType(), False),
-    T.StructField("source_table", T.StringType(), False),
-    T.StructField("source_column", T.StringType(), False),
-    T.StructField("target_table", T.StringType(), False),
-    T.StructField("target_column", T.StringType(), False),
-    T.StructField("relationship_type", T.StringType(), False),
-    T.StructField("confidence", T.DoubleType(), False),
-    T.StructField("cached_at", T.StringType(), False),
-])
+    return _frame(spark, proc_state_values())
 
 
 def rel_cache_df(spark: SparkSession) -> DataFrame:
-    from pyspark.sql import functions as F
-    return (spark.createDataFrame(REL_CACHE, _CACHE_SCHEMA)
-            .withColumn("cached_at", F.to_timestamp("cached_at")))
+    return _frame(spark, rel_cache_values())

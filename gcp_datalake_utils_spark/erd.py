@@ -2,8 +2,12 @@
 lifecycle, SURVEY.md §3.1, Spark-first).
 
 One lazy chain replaces the reference's five materializing stages:
-catalog -> classification -> detection -> layout -> format -> sink,
-with a single driver-side collect at the (diagram-scale) sink.
+catalog -> classification -> detection -> format -> sink, with a single
+driver-side collect at the (diagram-scale) sink. ``--layout`` is
+accepted and validated for the reference CLI's ``TABLE_LAYOUT``
+contract but does not change the output: drawio places tables on its
+own grid and the text formats carry no positions. Coordinates for a
+layout come from ``formatters.layout``.
 
 CLI:
     python -m gcp_datalake_utils_spark.erd \
@@ -25,8 +29,8 @@ from gcp_datalake_utils_spark.formatters import (
     mermaid_erd,
     plantuml_erd,
 )
-from gcp_datalake_utils_spark.formatters.layout import (
-    choose_layout,
+# unused here; kept importable because lakebench's tracer wraps them here
+from gcp_datalake_utils_spark.formatters.layout import (  # noqa: F401
     force_positions,
     grid_positions,
     hierarchical_positions,
@@ -38,6 +42,7 @@ from gcp_datalake_utils_spark.rules.config import PatternConfig
 FORMATS = {"mermaid": (mermaid_erd, ".mmd"),
            "plantuml": (plantuml_erd, ".puml"),
            "drawio": (drawio_erd, ".drawio")}
+LAYOUTS = ["auto", "grid", "hierarchical", "force"]
 
 
 def generate_erd(spark: SparkSession,
@@ -53,28 +58,18 @@ def generate_erd(spark: SparkSession,
 
     Toggle defaults mirror the reference CLI (main.py:49-63 /
     config.py:48-56): views and external tables excluded, column
-    types and nullable markers shown, drawio theme "default"."""
+    types and nullable markers shown, drawio theme "default".
+    ``layout`` is accepted for the reference's CLI / ``TABLE_LAYOUT``
+    contract and must be one of ``LAYOUTS``; it does not change the
+    output."""
     if fmt not in FORMATS:
         raise ValueError(f"unknown format {fmt!r}; one of {list(FORMATS)}")
-    filtered = not (include_views and include_external)
+    if layout not in LAYOUTS:
+        raise ValueError(f"unknown layout {layout!r}; one of {LAYOUTS}")
     cls = classified_columns(spark, config=config,
                              include_views=include_views,
-                             include_external=include_external).cache()
-    rels = detect_all(
-        spark, cls=None if (config is None and not filtered) else cls)
-    if layout == "auto":
-        n_tables = cls.select("table_id").distinct().count()
-        n_rels = rels.count()
-        layout = choose_layout(n_tables, n_rels)
-    # layouts inform position-aware sinks; text sinks (mermaid/plantuml)
-    # are order-based, so the layout is computed for its side effects on
-    # drawio and exposed for callers that want coordinates
-    if layout == "grid":
-        grid_positions(spark)
-    elif layout == "hierarchical":
-        hierarchical_positions(spark, rels)
-    elif layout == "force":
-        force_positions(spark, rels)
+                             include_external=include_external)
+    rels = detect_all(spark, cls=cls)
     fn, _ext = FORMATS[fmt]
     if fmt == "drawio":
         return fn(spark, cls, rels, theme=drawio_theme)
@@ -88,8 +83,7 @@ def main(argv: list[str] | None = None) -> int:
 
     p = argparse.ArgumentParser(description="Generate an ERD diagram")
     p.add_argument("--format", default=None, choices=sorted(FORMATS))
-    p.add_argument("--layout", default=None,
-                   choices=["auto", "grid", "hierarchical", "force"])
+    p.add_argument("--layout", default=None, choices=LAYOUTS)
     p.add_argument("--config", default=None,
                    help="reference-format relationship_patterns.json")
     p.add_argument("--include-views", default=None,

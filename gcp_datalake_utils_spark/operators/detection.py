@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from gcp_datalake_utils_spark.catalog import fixtures as fx
 from gcp_datalake_utils_spark.operators.classify import classified_columns
 from gcp_datalake_utils_spark.rules import compiler as rc
-from gcp_datalake_utils_spark.session import session_key
+from gcp_datalake_utils_spark.session import SessionCache, session_key
 
 # strategy union order in detect_relationships
 # (relationship_detector.py:58-77) — the tie-break the reference gets from
@@ -485,7 +485,8 @@ def validate_relationships(rels: DataFrame, cls: DataFrame) -> DataFrame:
         .select(*REL_COLS))
 
 
-_DETECT_CACHE: dict[tuple[int, bool], DataFrame] = {}
+# (session, filtered, cls plan hash) -> (cls, checkpointed relationships)
+_DETECT_MEMO = SessionCache(maxsize=8)
 
 
 def detect_all(spark: SparkSession,
@@ -495,17 +496,23 @@ def detect_all(spark: SparkSession,
     validation): five strategies -> union -> conflict resolution ->
     top-N filter -> schema validation.
 
-    The default-catalog result is eagerly checkpointed and memoized per
-    session: the relationships table is the shared input of the graph /
-    quality / formatter layers, and the catalog is immutable within a
-    session — consumers get a materialized metadata-sized DataFrame
-    instead of re-deriving the five-strategy plan."""
-    memo_key = ((session_key(spark), filtered)
-                if cls is None else None)
-    if memo_key is not None and memo_key in _DETECT_CACHE:
-        return _DETECT_CACHE[memo_key]
+    The result is eagerly checkpointed and memoized: the relationships
+    table is the shared input of the graph / quality / formatter layers,
+    so consumers get a materialized metadata-sized DataFrame instead of
+    re-deriving the five-strategy plan. The memo is per SparkContext and
+    keyed by ``filtered`` and the plan of ``cls`` (default: the shipped
+    catalog's ``classified_columns``): a call whose ``cls`` is
+    ``sameSemantics``-equal to a memoized one, such as a catalog built
+    again from the same fixtures, config and table-type toggles, gets the
+    same DataFrame object back. It holds the 8 most recently used
+    results. As with Spark's own ``cache``, a ``cls`` planned over files
+    that change within the session is answered from the memo, not
+    re-read."""
     c = cls if cls is not None else classified_columns(spark)
-    c = c.cache()
+    key = (session_key(spark), filtered, c.semanticHash())
+    hit = _DETECT_MEMO.get(key)
+    if hit is not None and hit[0].sameSemantics(c):
+        return hit[1]
     rels = (detect_foreign_keys(spark, c)
             .unionByName(detect_naming_conventions(spark, c))
             .unionByName(detect_enhanced_pk_fk(spark, c))
@@ -514,9 +521,8 @@ def detect_all(spark: SparkSession,
     resolved = resolve_conflicts(rels)
     out = filter_relationships(resolved) if filtered \
         else resolved.select(*REL_COLS)
-    out = validate_relationships(out, c) \
-        .withColumn("confidence", F.round("confidence", 6))
-    if memo_key is not None:
-        out = out.localCheckpoint()
-        _DETECT_CACHE[memo_key] = out
+    out = (validate_relationships(out, c)
+           .withColumn("confidence", F.round("confidence", 6))
+           .localCheckpoint())
+    _DETECT_MEMO.put(key, (c, out))
     return out

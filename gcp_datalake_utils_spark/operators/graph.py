@@ -57,10 +57,6 @@ def bfs_levels(spark: SparkSession,
     small independent job over the (broadcast-sized) edge list instead of
     a re-derivation of the whole detection pipeline."""
     rels = rels if rels is not None else detect_all(spark)
-    # materialize once: an explicitly-passed rels (e.g. custom-config
-    # detection, which is not memoized) would otherwise re-derive the
-    # whole detection pipeline for edges() AND roots()
-    rels = rels.localCheckpoint()
     # The relationship graph is METADATA-sized at any data scale (one
     # node per table), so the whole iteration runs on single-partition
     # frames: each level is then one 1-task job instead of a

@@ -13,6 +13,52 @@ import os
 from pyspark.sql import SparkSession
 
 
+# In local mode the driver heap also hosts every task's execution memory
+# AND the AQE broadcast builds: a ~64 MB compressed query stage
+# decompresses into a GB-scale HashedRelation, and at sf10 the dedup
+# family's verify joins OOMed flakily against 8g (16g passes, and the
+# broadcast conversion then wins: near_dup_pairs 141 -> 74 s). The heap
+# is capped by the machine too: JVM off-heap and Python workers need the
+# rest, and a 16g heap on a 15 GB host gets the JVM OOM-killed. On a
+# real cluster the driver hosts neither, so this is a local-harness
+# knob, not a scale requirement.
+DRIVER_MEM_CAP_MB = 16 * 1024
+DRIVER_MEM_FRACTION = 0.4
+_CGROUP_LIMITS = ("/sys/fs/cgroup/memory.max",  # cgroup v2
+                  "/sys/fs/cgroup/memory/memory.limit_in_bytes")  # v1
+
+
+def memory_limit_bytes(meminfo: str = "/proc/meminfo",
+                       cgroup_limits: tuple[str, ...] = _CGROUP_LIMITS
+                       ) -> int:
+    """The smaller of host memory (``MemTotal``) and the first numeric
+    cgroup memory limit (cgroup v2 writes ``max`` when unlimited)."""
+    with open(meminfo, encoding="ascii") as f:
+        host = next(int(line.split()[1]) * 1024 for line in f
+                    if line.startswith("MemTotal:"))
+    for path in cgroup_limits:
+        try:
+            with open(path, encoding="ascii") as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            return min(host, int(raw))
+    return host
+
+
+def driver_memory(limit_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a session on this machine:
+    ``SPARK_GRAFT_DRIVER_MEM`` if set, else the smaller of 16g and
+    ``DRIVER_MEM_FRACTION`` of ``limit_bytes`` (default: the host or
+    cgroup memory limit), in MiB."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    limit = memory_limit_bytes() if limit_bytes is None else limit_bytes
+    return f"{min(DRIVER_MEM_CAP_MB, int(limit * DRIVER_MEM_FRACTION) >> 20)}m"
+
+
 def get_spark(app_name: str = "gcp-datalake-utils-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
@@ -45,16 +91,7 @@ def get_spark(app_name: str = "gcp-datalake-utils-spark",
         # vectorized parquet reader rejects; read them as long (ns since
         # epoch) and convert at the operator boundary (sources.event_ts)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # 16g, not 8g: in local mode the driver heap also hosts every
-        # task's execution memory AND the AQE broadcast builds — a
-        # ~64 MB compressed query stage decompresses into a GB-scale
-        # HashedRelation, and at sf10 the dedup family's verify joins
-        # OOMed flakily against 8g (measured; 16g passes and the
-        # broadcast conversion then WINS: near_dup_pairs 141 -> 74 s).
-        # On a real cluster the driver hosts neither, so this is a
-        # local-harness knob, not a scale requirement.
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE",
                                "/tmp/spark_graft_warehouse"))

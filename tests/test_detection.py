@@ -37,6 +37,23 @@ def test_data_vault_hub_reference_quirk(spark):
     assert row[0]["is_fk"]
 
 
+def test_detect_all_memo_is_keyed_by_catalog_plan(spark):
+    from gcp_datalake_utils_spark.operators.classify import (
+        classified_columns,
+    )
+
+    def cli_catalog():
+        return classified_columns(spark, include_views=False,
+                                  include_external=False)
+
+    first = detection.detect_all(spark, cls=cli_catalog())
+    assert detection.detect_all(spark, cls=cli_catalog()) is first
+    assert detection.detect_all(spark, cls=classified_columns(spark)) \
+        is not first
+    assert detection.detect_all(spark, cls=cli_catalog(),
+                                filtered=False) is not first
+
+
 def test_custom_rules_survive_pipeline(rels):
     hits = [r for r in rels if r.source_table == "lineitem"
             and r.target_table == "orders"]

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import pytest
+
+from gcp_datalake_utils_spark.catalog import fixtures as fx
 from gcp_datalake_utils_spark.erd import generate_erd
 from gcp_datalake_utils_spark.formatters.layout import (
     choose_layout,
@@ -44,3 +47,32 @@ def test_generate_erd_formats(spark):
     assert doc.startswith("erDiagram")
     doc2 = generate_erd(spark, "drawio", "grid")
     assert doc2.startswith("<?xml")
+
+
+@pytest.mark.parametrize("name", [
+    "meta_tables_df", "meta_columns_df", "custom_rules_df",
+    "naming_patterns_df", "proc_state_df", "rel_cache_df"])
+def test_catalog_frames_are_sql_literals(spark, name):
+    plan = (getattr(fx, name)(spark)._jdf.queryExecution()
+            .executedPlan().toString())
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_sql_lit_rejects_backslash():
+    # Spark reads '^(.+)\d$' as '^(.+)d$'; DuckDB keeps it verbatim
+    with pytest.raises(ValueError, match="backslash"):
+        fx._sql_lit("^(.+)\\d$")
+    with pytest.raises(ValueError, match="backslash"):
+        fx._sql_lit("a\\nb")
+    assert fx._sql_lit("it's") == "'it''s'"
+
+
+def test_generate_erd_caches_no_new_plan_per_call(spark):
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    generate_erd(spark, "mermaid")
+    # cachedData() returns an immutable snapshot: read it after each call
+    before = manager.cachedData().size()
+    for _ in range(3):
+        generate_erd(spark, "mermaid")
+        assert manager.cachedData().size() == before

@@ -274,8 +274,11 @@ def test_erd_display_toggles(spark):
     dark = generate_erd(spark, "drawio", drawio_theme="dark")
     assert "fillColor=#dae8fc" in dflt
     assert "fillColor=#2d2d2d" in dark and "#dae8fc" not in dark
-    with pytest.raises(ValueError, match="unknown drawio theme"):
-        generate_erd(spark, "drawio", drawio_theme="neon")
+    for kw, msg in [({"fmt": "drawio", "drawio_theme": "neon"},
+                     "unknown drawio theme"),
+                    ({"layout": "hierarchial"}, "unknown layout")]:
+        with pytest.raises(ValueError, match=msg):
+            generate_erd(spark, **kw)
 
 
 def test_cli_dry_run_resolves_toggles(capsys):

@@ -12,10 +12,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
+
+# the checkout this script lives in, not whichever one is installed
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _norm_cell(v) -> str:
@@ -72,8 +76,9 @@ def main() -> int:
         else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entry_mod
+    from gcp_datalake_utils_spark.session import driver_memory
     # Deliberately a VANILLA session (not our session factory): the
     # driver's harness builds its own SparkSession, so any conf the engine
     # needs must be set by the engine at read time — checking with our own
@@ -83,7 +88,7 @@ def main() -> int:
     spark = (SparkSession.builder.master("local[32]")
              .appName("correctness-check")
              .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "8g")
+             .config("spark.driver.memory", driver_memory())
              .getOrCreate())
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -45,6 +45,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from gcp_datalake_utils_spark.llm import similarity as S
+    from gcp_datalake_utils_spark.session import driver_memory
 
     spark = (SparkSession.builder.appName("quantized_crossover")
              .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', 32)}]")
@@ -52,8 +53,7 @@ def main() -> None:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled",
                      "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "true")  # the bytes source
              .config("spark.ui.port", "4049")
              .getOrCreate())
